@@ -14,13 +14,16 @@ the whole job. Two implementations are provided; both add the deterministic
 tie-break the reference lacks (SURVEY.md §2.3 ⚠).
 
 1. ``enrich_top1_mapside`` (preferred, used by the chess pipeline): the
-   dimension is collapsed to ONE array<struct> row, broadcast-cross-joined
-   onto the fact table, and the argmax is computed per fact row with
+   dimension is collected once and embedded in the plan as ONE literal
+   array<struct> (built from a single JSON string that the optimizer
+   constant-folds), and the argmax is computed per fact row with
    higher-order functions (FILTER + REDUCE over the array). Zero shuffle,
    zero window, stays inside whole-stage codegen; scales as
    O(|fact| * |dim|) comparisons map-side, which is exactly what the
    reference's nested-loop lateral does — minus its single-process limit.
-   Requires the dimension to fit in a broadcast (~3.5k openings: trivially).
+   Plan build is one py4j call for the whole dimension; the folded literal
+   ships in every task binary, so the dimension must stay small
+   (~3.5k openings: trivially).
 
 2. ``enrich_top1_join`` (generic): broadcast theta-join + max_by aggregation
    for dimensions too large to collapse, or when the predicate needs the
@@ -34,6 +37,7 @@ from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType
 
 
 def _better(a: Column, b: Column, rank_field: str, tiebreak_fields: Sequence[str]) -> Column:
@@ -74,11 +78,12 @@ def enrich_top1_mapside(
     rows, src/find-openings.ts:68): each output column keeps its existing
     fact value on those rows (NULL if the output column is new).
 
-    max_dim_rows guards the plan: the dim is embedded as a literal
-    array<struct> whose size is linear in the dim (serialized into every
-    task binary, compiled into the plan). Beyond the cap this raises —
-    use ``enrich_top1_join``, which broadcasts through the exchange
-    machinery instead of the plan, for larger dimensions.
+    max_dim_rows guards the plan: the dim is embedded as ONE folded literal
+    array<struct> whose size is linear in the dim, and that literal ships
+    in every task binary. Building it is one JSON string literal (one py4j
+    call whatever the dim's size), but beyond the cap this raises — use
+    ``enrich_top1_join``, which broadcasts through the exchange machinery
+    instead of the plan, for larger dimensions.
     """
     tiebreak_cols = list(tiebreak_cols or [])
     if only_if_null is not None and only_if_null not in fact.columns:
@@ -96,27 +101,40 @@ def enrich_top1_mapside(
     # (A crossJoin against a collect_list-aggregated 1-row frame plans the
     # same thing, but Spark 4.1 miscompiles outer column references inside
     # HOF lambdas over that shape on a cold JVM — ATTRIBUTE_NOT_FOUND.)
+    # The literal is one JSON string: each row is serialized by Spark's own
+    # to_json in the collect job and parsed back by from_json with the exact
+    # element type, which the optimizer constant-folds — one py4j call for
+    # the whole dim, and nothing parsed per row.
     elem_type = dim.select(F.struct(*[F.col(c) for c in struct_cols]).alias("s")).schema[
         "s"
     ].dataType
+    # Microsecond timestamps: the JSON defaults write milliseconds only.
+    json_opts = {
+        "timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
+        "timestampNTZFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
+    }
     # One job both guards and collects: fetch max_dim_rows+1 rows — if the
     # limit row materializes, the dim is too big (and we never executed the
     # dim subtree twice).
-    fetched = dim.select(*struct_cols).distinct().limit(max_dim_rows + 1).collect()
+    fetched = (
+        dim.select(*struct_cols)
+        .distinct()
+        .select(*struct_cols, F.to_json(F.struct(*struct_cols), json_opts).alias("__json"))
+        .limit(max_dim_rows + 1)
+        .collect()
+    )
     if len(fetched) > max_dim_rows:
         raise ValueError(
             f"enrich_top1_mapside: dimension exceeds max_dim_rows={max_dim_rows}; "
-            "the literal-array plan would bloat linearly with the dim — "
-            "use enrich_top1_join for large dimensions"
+            "the folded literal array ships in every task binary and grows "
+            "linearly with the dim — use enrich_top1_join for large dimensions"
         )
-    dim_rows = sorted(fetched, key=lambda r: tuple((v is None, v) for v in r))
-    arr = F.array(
-        *[
-            F.struct(
-                *[F.lit(r[c]).cast(f.dataType).alias(c) for c, f in zip(struct_cols, elem_type.fields)]
-            )
-            for r in dim_rows
-        ]
+    n = len(struct_cols)
+    dim_rows = sorted(fetched, key=lambda r: tuple((v is None, v) for v in r[:n]))
+    arr = F.from_json(
+        F.lit("[" + ",".join(r[n] for r in dim_rows) + "]"),
+        ArrayType(elem_type),
+        {**json_opts, "mode": "FAILFAST"},
     )
     joined = fact.withColumn("__dim_arr", arr)
 

@@ -115,7 +115,10 @@ def export_combined(sources: Sequence[DataFrame]) -> DataFrame:
     enriched sources, apply the fixed 20-column projection (:70-90) and the
     hygiene filter `UTCDate IS NOT NULL AND year(UTCDate) >= 1500` (:92-93)."""
     combined = align_and_union(list(sources))
-    utc_date = F.to_date(F.regexp_replace(F.col("UTCDate"), r"\.", "-"), "yyyy-M-d")
+    # try_to_date (the reference's DuckDB try_strptime): partial PGN dates
+    # such as `????.??.??` or `2019.03.??` become NULL and the filter drops
+    # them, where to_date raises CANNOT_PARSE_TIMESTAMP under ANSI mode.
+    utc_date = F.try_to_date(F.regexp_replace(F.col("UTCDate"), r"\.", "-"), "yyyy-M-d")
     return (
         combined.withColumn("__d", utc_date)
         .where(F.col("__d").isNotNull() & (F.year("__d") >= 1500))

@@ -493,65 +493,74 @@ _ALL_ORACLES = {**core.ORACLES, **chess.ORACLES, **mm.ORACLES, **llm.ORACLES}
 # registrations leave 50 - 15 - R refresh slots, and the stalest
 # r13-green MUST fill them. Verify with tests/test_suite_order.py
 # before committing, as always.
-WINDOW_BUDGETED_FOR = 15
+#
+# r16 window (EXECUTED per the committed r15 plan above with R = 0 — no
+# candidate registered; the plan landed after CORRECTNESS_r16.json, so
+# the budget names r16 and the ratchet checks its post-run floor):
+#   1. the 15 queries whose newest green row is r12 (at the P - 1 = 3
+#      age bound): sort_limit … winsorize, alphabetical.
+#   2. 35 of the 50 queries whose newest green row is r13 — the stalest
+#      cohort, alphabetical: ann_recall … repetition_metrics.
+#      15 + 35 = 50, zero rotation slack.
+# The 15 r13-green left out (alphabetical tail: rolling_avg … vocab_topk)
+# sit at age 3 = the P - 1 bound once r16 is the latest record, so the
+# next re-plan MUST take them first, then the stalest r14-green.
+WINDOW_BUDGETED_FOR = 16
 
 _WINDOW_ORDER = [
-    # new to the gate in r15 — never driver-verified (the nine promoted
-    # STAGED_CANDIDATES, oldest staged evidence first per the committed
-    # plan)
-    "stream_sessionize",
-    "heavy_hitters_staged",
-    "stream_dedup_watermark",
-    "pq_recall",
-    "rank_sketch",
-    "linkage_score",
-    "knn_ivfpq",
-    "rank_sketch_staged",
-    "linkage_entities",
-    # newest green row r11 — the 6 deferred from r14, at the age bound
-    "shipping_priority",
-    "source_kl",
-    "split_leakage_safe",
-    "substring_search",
-    "text_normalize",
-    "tfidf",
-    # newest green row r12 — 35 of the 50 stalest, alphabetical (the 15
-    # left out move to age 3 = the P - 1 bound; r16 takes them first)
-    "activity_islands",
-    "asof_join",
-    "asof_nearest",
-    "bloom_gate_table",
-    "bm25_batch",
-    "bm25_staged",
-    "budget_sample",
-    "canary_scan",
-    "chess_export",
-    "chunk_dedup",
-    "contamination_ngram",
-    "contamination_semantic",
-    "dedup_exact",
-    "dedup_incremental",
-    "dedup_span",
-    "dq_check",
-    "dsir_topk",
-    "enrich_argmax",
-    "group_buckets",
-    "html_strip",
-    "interleave_sources",
-    "knn_ivf_kmeans",
-    "lateral_topk",
-    "merge_update",
-    "mm_frame_sample",
-    "paragraph_dedup",
-    "pareto_frontier",
-    "pii_scan",
-    "qc_count",
-    "robust_zscore",
-    "sample_temperature",
-    "scd2_versions",
-    "score_percentile",
-    "semi_join",
-    "shard_assignments",
+    # newest green row r12 — the 15 deferred from r15, at the age bound
+    "sort_limit",
+    "source_stats_pandas",
+    "text_langid",
+    "text_quality",
+    "tfidf_cosine",
+    "token_count",
+    "token_entropy",
+    "udaf_gmean",
+    "udtf_bigrams",
+    "union_append",
+    "upsample_epochs",
+    "user_growth",
+    "weighted_quantiles",
+    "window_topk",
+    "winsorize",
+    # newest green row r13 — 35 of the 50 stalest, alphabetical (the 15
+    # left out move to age 3 = the P - 1 bound; the next window takes them)
+    "ann_recall",
+    "bm25_topk",
+    "boilerplate_strip",
+    "bpe_train",
+    "classifier_hashed",
+    "corpus_delta",
+    "corpus_sketch_counts",
+    "dedup_hamming64",
+    "dedup_minhash_lsh",
+    "dedup_semdedup",
+    "doc_chunks",
+    "embedding_drift",
+    "event_funnel",
+    "event_outliers",
+    "events_hourly",
+    "export_projection",
+    "filter_null_predicate",
+    "groupby_agg",
+    "heavy_hitters",
+    "join_star",
+    "json_extract",
+    "knn_quantized",
+    "label_centroids",
+    "lake_skipping_read",
+    "length_histogram",
+    "lm_score",
+    "lm_score_bigram",
+    "lsh_recall",
+    "mm_decode_meta",
+    "pack_sequences",
+    "pmi_topk",
+    "quality_buckets",
+    "quality_gopher",
+    "quantile_normalize",
+    "repetition_metrics",
 ]
 
 QUERIES = {name: _ALL_QUERIES[name] for name in _WINDOW_ORDER}

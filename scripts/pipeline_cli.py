@@ -83,6 +83,9 @@ def cmd_read_pgn(args: argparse.Namespace) -> None:
 
 
 def cmd_find_openings(args: argparse.Namespace) -> None:
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
     from chess_lakehouse_spark.plans.pipeline import enrich
     from chess_lakehouse_spark.sources.openings import load_openings
 
@@ -90,8 +93,10 @@ def cmd_find_openings(args: argparse.Namespace) -> None:
     games = spark.read.parquet(args.inDir)
     openings = load_openings(spark, args.openingsDb)
     enriched = enrich(games, openings.select("eco", "name", "pgn", "uci"), args.dataSource)
-    enriched.write.mode("overwrite").parquet(args.outDir)
-    print(f"[find-openings] key={args.key} dataSource={args.dataSource} rows={spark.read.parquet(args.outDir).count()}")
+    # the row count rides on the write job itself — no re-read of the output
+    obs = Observation("find_openings")
+    enriched.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite").parquet(args.outDir)
+    print(f"[find-openings] key={args.key} dataSource={args.dataSource} rows={obs.get['rows']}")
 
 
 def cmd_export_parquet(args: argparse.Namespace) -> None:

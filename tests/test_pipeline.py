@@ -143,8 +143,9 @@ def test_enrich_mapside_only_if_null_gates_on_named_column(spark, openings_df):
 
 
 def test_enrich_mapside_dim_size_guard(spark):
-    """The literal-array plan grows linearly with the dim — beyond
-    max_dim_rows the operator must refuse and point at enrich_top1_join."""
+    """The folded literal array ships in every task binary and grows
+    linearly with the dim — beyond max_dim_rows the operator must refuse
+    and point at enrich_top1_join."""
     from chess_lakehouse_spark.operators.enrich import enrich_top1_mapside
 
     fact = spark.createDataFrame([("x",)], "probe string")
@@ -159,6 +160,171 @@ def test_enrich_mapside_dim_size_guard(spark):
             max_dim_rows=10,
         )
 
+
+def _top1_reference(probes, dim_rows):
+    """Pure-Python longest-prefix top-1: among dim rows whose ``pgn`` is a
+    substring of the probe, the highest ``ply`` wins, ties broken by
+    ``eco`` then ``name`` ascending; None when nothing matches."""
+    out = {}
+    for key, probe in probes:
+        cands = [d for d in dim_rows if d["pgn"] in probe]
+        out[key] = min(cands, key=lambda d: (-d["ply"], d["eco"], d["name"])) if cands else None
+    return out
+
+
+def _mapside_top1(fact, dim, payload_cols):
+    from chess_lakehouse_spark.operators.enrich import enrich_top1_mapside
+
+    return enrich_top1_mapside(
+        fact=fact,
+        dim=dim,
+        predicate=lambda probe, c: probe.contains(c["pgn"]),
+        fact_probe_col="probe",
+        rank_col="ply",
+        payload_cols=payload_cols,
+        tiebreak_cols=["eco", "name"],
+        out_prefix="m_",
+    )
+
+
+def _assert_matches_reference(out, probes, dim_rows, payload_cols):
+    ref = _top1_reference(probes, dim_rows)
+    got = {r["key"]: r for r in out.collect()}
+    assert set(got) == set(ref)
+    for key, best in ref.items():
+        for c in payload_cols:
+            want = None if best is None else best[c]
+            assert got[key][f"m_{c}"] == want, (key, c)
+
+
+def test_enrich_mapside_literal_round_trips_awkward_values(spark):
+    """The dim literal is one JSON string: quotes, backslashes, non-ASCII
+    text, NULL payload fields and microsecond timestamps must come back
+    exactly, and equal-rank ties still settle on eco then name."""
+    import datetime
+
+    ts = datetime.datetime(2021, 3, 4, 5, 6, 7, 123456)
+    dim_rows = [
+        {"eco": "D80", "name": "Grünfeld Defense", "pgn": "d4 Nf6 c4 g6 Nc3 d5", "ply": 6, "note": "ü", "as_of": ts},
+        {"eco": "D80", "name": "Grünfeld Defence", "pgn": "d4 Nf6 c4 g6 Nc3 d5", "ply": 6, "note": None, "as_of": None},
+        {"eco": "A00", "name": "It's \"quoted\"", "pgn": "g4 'x'", "ply": 2, "note": 'say "hi"', "as_of": ts},
+        {"eco": "A01", "name": "Back\\slash", "pgn": "b3 \\e5", "ply": 2, "note": "a\\b\nc", "as_of": None},
+        {"eco": "A02", "name": "Same Ply", "pgn": "b3", "ply": 2, "note": None, "as_of": ts},
+        {"eco": "A01", "name": "Same Ply", "pgn": "b3 ", "ply": 2, "note": "tie", "as_of": ts},
+        {"eco": "E00", "name": "Queen's Pawn", "pgn": "d4 Nf6", "ply": 2, "note": "{}[],:", "as_of": ts},
+    ]
+    probes = [
+        ("grunfeld", "d4 Nf6 c4 g6 Nc3 d5 cxd5"),
+        ("quoted", "g4 'x' e5"),
+        ("backslash", "b3 \\e5 Nc3"),
+        ("tie", "b3 e5"),
+        ("qp", "d4 Nf6 Bg5"),
+        ("none", "h4 h5"),
+    ]
+    payload_cols = ["eco", "name", "note", "as_of"]
+    dim = spark.createDataFrame(
+        [tuple(d[c] for c in ("eco", "name", "pgn", "ply", "note", "as_of")) for d in dim_rows],
+        "eco string, name string, pgn string, ply int, note string, as_of timestamp",
+    )
+    fact = spark.createDataFrame(probes, "key string, probe string")
+    out = _mapside_top1(fact, dim, payload_cols)
+    _assert_matches_reference(out, probes, dim_rows, payload_cols)
+    rows = {r["key"]: r for r in out.collect()}
+    assert rows["grunfeld"]["m_name"] == "Grünfeld Defence", "ties settle on name"
+    assert rows["grunfeld"]["m_note"] is None
+    assert rows["backslash"]["m_note"] == "a\\b\nc"
+    assert rows["tie"]["m_eco"] == "A01", "ties settle on eco first"
+    assert rows["quoted"]["m_as_of"] == ts, "microseconds survive the literal"
+
+
+def test_enrich_mapside_literal_is_folded_in_optimized_plan(spark):
+    """The dimension's from_json over a string literal is constant-folded on
+    the driver: no JSON parse is left in the optimized plan, so nothing is
+    parsed per fact row."""
+    dim = spark.createDataFrame(OPENINGS, "eco string, name string, pgn string, uci string").select(
+        "eco", "name", "pgn", F.length("pgn").alias("ply")
+    )
+    fact = spark.createDataFrame([("k", "1. e4 c6 2. d4 d5")], "key string, probe string")
+    qe = _mapside_top1(fact, dim, ["eco", "name"])._jdf.queryExecution()
+    assert "from_json" in qe.analyzed().toString(), "the literal is built by from_json"
+    optimized = qe.optimizedPlan().toString()
+    assert "JsonToStructs" not in optimized and "from_json" not in optimized
+
+
+def test_enrich_mapside_lichess_size_dimension(spark):
+    """A Lichess-size dimension (~3,400 openings) builds and enriches ~200
+    games exactly like the pure-Python top-1 reference."""
+    import random
+
+    rnd = random.Random(3400)
+    moves = ["e4", "d4", "c4", "Nf3", "e5", "c5", "d5", "Nf6"]
+    dim_rows, seen = [], set()
+    while len(dim_rows) < 3400:
+        ply = rnd.randint(1, 8)
+        pgn = " ".join(rnd.choice(moves) for _ in range(ply))
+        # few distinct eco codes, so equal-ply ties reach the name tie-break
+        eco = f"{rnd.choice('ABCDE')}{rnd.randint(0, 3):02d}"
+        name = f"Opening {len(dim_rows) % 997}"
+        if (eco, name, pgn) in seen:
+            continue
+        seen.add((eco, name, pgn))
+        dim_rows.append({"eco": eco, "name": name, "pgn": pgn, "ply": ply})
+    probes = [
+        (f"g{i}", " ".join(rnd.choice(moves) for _ in range(rnd.randint(4, 14)))) for i in range(200)
+    ]
+    dim = spark.createDataFrame(
+        [(d["eco"], d["name"], d["pgn"], d["ply"]) for d in dim_rows],
+        "eco string, name string, pgn string, ply int",
+    )
+    fact = spark.createDataFrame(probes, "key string, probe string")
+    _assert_matches_reference(_mapside_top1(fact, dim, ["eco", "name"]), probes, dim_rows, ["eco", "name"])
+
+
+def test_export_drops_partial_pgn_dates(spark):
+    """PGN allows partial dates (`????.??.??`, `2019.??.??`, `2019.03.??`):
+    they parse to NULL and the hygiene filter drops them instead of raising
+    CANNOT_PARSE_TIMESTAMP under ANSI mode; full dates are unchanged."""
+    import datetime
+
+    dates = [
+        ("unknown", "????.??.??"),
+        ("year_only", "2019.??.??"),
+        ("no_day", "2019.03.??"),
+        ("full", "2021.01.31"),
+        ("short", "2019.3.5"),
+    ]
+    cols = [c for c in EXPORT_COLUMNS if c not in ("year", "month")] + ["clean_timecontrol"]
+    frame = spark.createDataFrame(
+        [tuple({"Event": event, "UTCDate": d}.get(c) for c in cols) for event, d in dates],
+        ", ".join(f"{c} string" for c in cols),
+    )
+    rows = {r["Event"]: r for r in export_combined([frame]).collect()}
+    assert set(rows) == {"full", "short"}
+    assert rows["full"]["UTCDate"] == datetime.date(2021, 1, 31)
+    assert rows["full"]["year"] == 2021 and rows["full"]["month"] == "01"
+    assert rows["short"]["UTCDate"] == datetime.date(2019, 3, 5)
+
+
+def test_find_openings_cli_counts_rows_from_the_write(spark, tmp_path, capsys):
+    """find-openings prints the enriched row count observed on its write job
+    (no re-read of the output), in the reference's one-line format."""
+    import sys
+    from pathlib import Path
+
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "scripts"))
+    import pipeline_cli
+
+    raw, enr = str(tmp_path / "raw"), str(tmp_path / "enriched")
+    ingest(spark, make_games_pgn(tmp_path)).write.parquet(raw)
+    op_dir = str(tmp_path / "openings")
+    spark.createDataFrame(OPENINGS, "eco string, name string, pgn string, uci string").write.parquet(op_dir)
+    capsys.readouterr()
+    pipeline_cli.main([
+        "find-openings", "--key", "k1", "--inDir", raw, "--outDir", enr,
+        "--openingsDb", op_dir, "--dataSource", "SrcCLI",
+    ])
+    assert capsys.readouterr().out == "[find-openings] key=k1 dataSource=SrcCLI rows=6\n"
+    assert spark.read.parquet(enr).count() == 6
 
 def test_export_schema_filter_and_coalesce(spark, tmp_path, openings_df):
     games = ingest(spark, make_games_pgn(tmp_path))
